@@ -1,0 +1,126 @@
+"""The runner's single pass 2: empty buckets, observed checksums, the
+Spark job budget per bucket, and the rdf:type-only pass 1."""
+
+import json
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from tripsu_spark.crypto import Pseudonymizer
+from tripsu_spark.operators.extract import extract_triples, type_triples
+from tripsu_spark.operators.index import build_type_index
+from tripsu_spark.plans.compact import maybe_expand
+from tripsu_spark.plans.lineage import (
+    GraphTableWriter,
+    _invalid_transcript,
+    bucket_col,
+    triples_checksum,
+)
+from tripsu_spark.plans.oracle import BENCH_SECRET
+from tripsu_spark.plans.pipeline import default_rules
+from tripsu_spark.sources.transcripts import synthetic_transcripts
+
+
+@pytest.fixture()
+def setup(spark, tmp_path):
+    transcripts = synthetic_transcripts(spark, n_convs=24, turns_per_conv=4)
+    hasher = Pseudonymizer.create("sha256", BENCH_SECRET)
+    return transcripts, default_rules(), hasher, str(tmp_path / "graph")
+
+
+def _with_bad_rows(spark, transcripts):
+    bad = spark.createDataFrame(
+        [
+            (None, 0, "user", "null conv", None, None),
+            ("conv-1", 1, None, "null role", None, None),
+            ("conv-2", 2, "user", None, None, None),
+        ],
+        schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    return transcripts.unionByName(bad)
+
+
+def _manifest(path, bucket):
+    with open(os.path.join(path, "_manifests", f"bucket-{bucket}.json")) as fh:
+        return json.load(fh)
+
+
+def test_empty_buckets_commit_and_read(spark, setup):
+    """More buckets than conversations, the last bucket empty: every
+    bucket commits, the snapshot commits, and read() serves all rows."""
+    _, rules, hasher, path = setup
+    transcripts = synthetic_transcripts(spark, n_convs=3, turns_per_conv=4)
+    n_buckets = 6
+    used = {r[0] for r in transcripts.select(bucket_col(n_buckets)).distinct().collect()}
+    assert n_buckets - 1 not in used and len(used) < n_buckets
+
+    writer = GraphTableWriter(path, n_buckets=n_buckets)
+    metrics = writer.run(spark, transcripts, rules, hasher)
+    assert writer.committed_buckets() == set(range(n_buckets)) | {"derived"}
+    for b in set(range(n_buckets)) - used:
+        assert _manifest(path, b)["row_count"] == 0
+    assert writer.snapshots()[-1]["schema"] is not None
+    assert writer.read(spark).count() == metrics["total_rows"] > 0
+
+
+@pytest.mark.parametrize("store_compact", [0, 2])
+def test_manifest_checksums_match_readback(spark, setup, store_compact):
+    """The checksums observed on the write equal a recomputation over
+    each committed bucket read back through the format seam."""
+    transcripts, rules, hasher, path = setup
+    writer = GraphTableWriter(path, n_buckets=4)
+    writer.run(spark, _with_bad_rows(spark, transcripts), rules, hasher,
+               store_compact=store_compact)
+    for b in writer.committed_buckets():
+        m = _manifest(path, b)
+        stored = writer.fmt.read(spark, os.path.join(writer.data_dir, f"bucket={b}"))
+        assert triples_checksum(maybe_expand(stored.drop("pred_part"))) == (
+            m["row_count"], m["checksum"]
+        )
+        assert m["storage_level"] == store_compact
+
+
+def _jobs_in_group(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_count_guard(spark, setup):
+    """Pass 2 is planned once per run: each extra bucket adds at most
+    its own write job, and a no-op resume launches no job at all."""
+    transcripts, rules, hasher, path = setup
+
+    def run(n_buckets):
+        return lambda: GraphTableWriter(f"{path}-b{n_buckets}", n_buckets=n_buckets).run(
+            spark, transcripts, rules, hasher
+        )
+
+    jobs_2 = _jobs_in_group(spark, run(2))
+    jobs_6 = _jobs_in_group(spark, run(6))
+    assert jobs_6 - jobs_2 <= 4
+    assert _jobs_in_group(spark, run(6)) == 0
+
+
+def test_type_triples_index_matches_full_extraction(spark, setup):
+    """Pass 1 built from the rdf:type-only extraction equals the index
+    of the full extraction, malformed rows present or filtered out."""
+    transcripts, *_ = setup
+    dirty = _with_bad_rows(spark, transcripts)
+
+    def index_rows(triples):
+        idx = build_type_index(triples).select("subject_key", F.array_sort("types"))
+        return {(k, tuple(types)) for k, types in idx.collect()}
+
+    for t in (dirty, dirty.filter(~_invalid_transcript())):
+        want = index_rows(extract_triples(t))
+        assert index_rows(type_triples(t)) == want and want

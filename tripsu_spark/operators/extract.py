@@ -97,12 +97,16 @@ def _with_mentions(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def per_turn_triples(transcripts: DataFrame) -> DataFrame:
+def per_turn_triples(transcripts: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """The stateless O(rows) bulk of extraction: each transcript row
     independently yields its turn triples (type/partOf/role/text/ts/
     tool/mentions) via one array<struct> + explode — a single narrow
     scan, shuffle-free, whole-stage-codegen'd. Also used unchanged by
-    the Structured Streaming path (it is append-only per row)."""
+    the Structured Streaming path (it is append-only per row).
+
+    ``carry`` names input columns copied onto every output row after
+    the triple columns (the bucketed writer carries ``_bucket``); the
+    default adds nothing, so the plan is the plain extraction's."""
     t = _with_mentions(transcripts)
     conv = _conv_iri()
 
@@ -139,6 +143,7 @@ def per_turn_triples(transcripts: DataFrame) -> DataFrame:
         F.lit(KIND_IRI).alias("s_kind"),
         _turn_iri().alias("s_value"),
         F.explode(F.concat(base, ts_arr, tool_arr, user_arr, item_arr)).alias("x"),
+        *carry,
     ).select(
         "s_kind",
         "s_value",
@@ -147,6 +152,7 @@ def per_turn_triples(transcripts: DataFrame) -> DataFrame:
         F.col("x.o_value").alias("o_value"),
         F.col("x.o_datatype").alias("o_datatype"),
         F.col("x.o_lang").alias("o_lang"),
+        *carry,
     )
 
 
@@ -258,6 +264,19 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     (conv_id, entity) pairs.
     """
     return per_turn_triples(transcripts).unionByName(derived_triples(transcripts))
+
+
+def type_triples(transcripts: DataFrame) -> DataFrame:
+    """The rdf:type rows of ``extract_triples`` — everything pass 1
+    (``build_type_index``) reads. Turn typing is minted directly, so
+    the text regexes and the explode of ``per_turn_triples`` never run;
+    the derived rows come from ``derived_triples`` itself."""
+    turn_type = transcripts.select(
+        *_subj(_turn_iri()), F.lit(RDF_TYPE).alias("predicate"), *_iri(F.lit(KG + "Turn"))
+    )
+    return turn_type.unionByName(
+        derived_triples(transcripts).filter(F.col("predicate") == RDF_TYPE)
+    )
 
 
 def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:

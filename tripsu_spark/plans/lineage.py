@@ -10,10 +10,19 @@ the exact spark-submit swap recipe is ``IcebergFormat``. Layout:
 - the transcript keyspace is split into ``n_buckets`` deterministic
   conv_id buckets (xxhash64; bucket == Spark shuffle hash semantics is
   NOT assumed — the bucket is data, not placement);
-- each bucket is processed and committed independently:
+- pass 1 builds the type index from the rdf:type rows only
+  (``type_triples``), once per table version;
+- pass 2 runs ONCE per run: one frame over the valid rows of every
+  pending bucket (no manifest yet), ``_bucket`` carried as a column,
+  persisted MEMORY_AND_DISK for the run and unpersisted at its end;
+- each pending bucket still commits independently from that frame:
   ``data/bucket=<k>/`` parquet + ``_manifests/bucket-<k>.json`` with
   snapshot id, row count and an order-insensitive checksum (XOR of
-  per-row xxhash64 over the canonical serialization);
+  per-row xxhash64 over the canonical serialization). Count and
+  checksum are observed on the write action itself
+  (``DataFrame.observe`` over the logical frame), not read back;
+- malformed rows are counted in one grouped aggregate per run and
+  written to ``_quarantine/bucket=<k>`` only for buckets that have any;
 - a killed job restarts and skips every bucket whose manifest exists
   (commit order: data first, manifest last, so a torn write re-runs);
 - ``metrics.json`` aggregates per-bucket counts at the end.
@@ -29,12 +38,13 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..crypto import Pseudonymizer
 from ..functions.terms import serialize_triple_line
-from ..operators.extract import derived_triples, extract_triples, per_turn_triples
+from ..operators.extract import derived_triples, per_turn_triples, type_triples
 from ..operators.index import build_type_index
 from ..rules import Rules
 from .pipeline import pseudonymize
@@ -100,13 +110,19 @@ def _invalid_transcript():
     )
 
 
+def _checksum_aggs():
+    """Row count and order-insensitive checksum over canonical lines, as
+    aggregate expressions: ``triples_checksum`` collects them, the
+    writer observes them on its write action."""
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(serialize_triple_line())).alias("checksum"),
+    )
+
+
 def triples_checksum(triples: DataFrame) -> tuple[int, int]:
     """(row_count, order-insensitive checksum) over canonical lines."""
-    row = (
-        triples.select(F.xxhash64(serialize_triple_line()).alias("h"))
-        .agg(F.count("*").alias("n"), F.bit_xor("h").alias("checksum"))
-        .collect()[0]
-    )
+    row = triples.agg(*_checksum_aggs()).collect()[0]
     return int(row["n"]), int(row["checksum"] or 0)
 
 
@@ -173,19 +189,28 @@ class GraphTableWriter:
                     out.append(json.load(fh))
         return out
 
-    def _commit_snapshot(self, snapshot_id: str, schema_json: str) -> None:
+    def _commit_snapshot(self, spark: SparkSession, snapshot_id: str) -> None:
         buckets = {}
+        sample = None
         for b in sorted(self.committed_buckets(), key=str):
             with open(self._manifest_path(b)) as fh:
                 m = json.load(fh)
+            path = os.path.join(self.data_dir, f"bucket={b}")
             buckets[str(b)] = {
-                "path": os.path.relpath(
-                    os.path.join(self.data_dir, f"bucket={b}"), self.base_path
-                ),
+                "path": os.path.relpath(path, self.base_path),
                 "row_count": m["row_count"],
                 "checksum": m["checksum"],
                 "quarantined": m.get("quarantined", 0),
             }
+            if m["row_count"] > 0:
+                sample = path
+        # The physical schema is sampled from a bucket that has data
+        # files (an empty bucket has none to infer it from); a table
+        # with no rows at all records none.
+        schema_json = (
+            self.fmt.read(spark, sample).drop("pred_part").schema.json()
+            if sample else None
+        )
         seq = len(self.snapshots()) + 1
         _atomic_write_json(
             os.path.join(self.snapshot_dir, f"{seq:06d}-{snapshot_id}.json"),
@@ -223,25 +248,36 @@ class GraphTableWriter:
         """Process every uncommitted bucket; returns metrics dict.
 
         ``fail_after_bucket`` injects a crash for the resume test.
-        The global type index is built over ALL transcripts first (pass
-        1 must see every rdf:type statement regardless of bucket) and
-        persisted once as the pass-2 broadcast side.
+        Pass 1 builds the global type index over ALL valid transcripts
+        (it must see every rdf:type statement regardless of bucket)
+        from their rdf:type rows only, and commits it once per table
+        version; its row count is observed on the write.
+
+        Pass 2 runs once per run, not once per bucket: one frame over
+        the valid rows of every pending bucket, ``_bucket`` carried as
+        a column, persisted MEMORY_AND_DISK before the first commit and
+        unpersisted when the run ends, crash included. Each pending
+        bucket then commits its slice through ``fmt.write``; the row
+        count and checksum are observed on that write over the logical
+        frame (before ``pred_part`` and compaction), so they are
+        storage-format-invariant and need no read-back. Malformed rows
+        are counted for all pending buckets in one grouped aggregate.
+        A no-op resume launches no Spark job.
 
         ``overwrite=True`` starts a NEW table version (fresh data dirs;
         prior snapshots stay readable via ``read(as_of=...)``).
         ``store_compact`` stores this version compacted
         (plans/compact.py; True/1 = prefix codes, 2 = + dictionary-coded
         kind/predicate/datatype tinyints) — a PHYSICAL schema change;
-        ``read`` restores the identical logical frame, and checksums are
-        computed on the logical frame so they are storage-format-invariant.
+        ``read`` restores the identical logical frame.
         """
         snapshot_id = snapshot_id or f"snap-{int(time.time() * 1000)}"
         if overwrite and (self.committed_buckets() or self.snapshots()):
             self._set_version(self.version + 1)
 
-        # Split valid/quarantine ONCE; every pass below sees valid rows
-        # only, and malformed rows land in _quarantine/bucket=<k> with
-        # per-bucket counts in the manifests (audit trail, SURVEY §4).
+        # Every pass below sees valid rows only; malformed rows land in
+        # _quarantine/bucket=<k> with per-bucket counts in the manifests
+        # (audit trail, SURVEY §4).
         valid = transcripts.filter(~_invalid_transcript())
 
         index_path = os.path.join(
@@ -250,13 +286,14 @@ class GraphTableWriter:
         )
         index_manifest = os.path.join(self.manifest_dir, "type_index.json")
         if not os.path.exists(index_manifest):
-            index_df = build_type_index(extract_triples(valid))
-            self.fmt.write(index_df, index_path)
-            n = self.fmt.read(spark, index_path).count()
+            obs = Observation()
+            self.fmt.write(
+                build_type_index(type_triples(valid)).observe(obs, F.count(F.lit(1)).alias("n")),
+                index_path,
+            )
             _atomic_write_json(index_manifest, {
-                "snapshot_id": snapshot_id, "rows": n, "stage": "pass1"
+                "snapshot_id": snapshot_id, "rows": obs.get["n"], "stage": "pass1"
             })
-        index_df = self.fmt.read(spark, index_path)
 
         done = self.committed_buckets()
         # A table version must be one physical layout: resuming with a
@@ -288,75 +325,45 @@ class GraphTableWriter:
                 )
             break  # all buckets of a version share one level; checking one suffices
         metrics: dict = {"snapshot_id": snapshot_id, "buckets": {}, "skipped": sorted(done, key=str)}
-        # null conv_id (a quarantine case) hashes to bucket 0 so every
-        # malformed row still has a deterministic home bucket.
-        bucketed = transcripts.withColumn(
-            "_bucket", F.coalesce(bucket_col(self.n_buckets), F.lit(0))
-        )
-
-        # Per-turn triples are conversation-local -> one bucket each.
+        pending = [b for b in range(self.n_buckets) if b not in done]
+        if pending or "derived" not in done:
+            index_df = self.fmt.read(spark, index_path)
+        if pending:
+            # null conv_id (a quarantine case) hashes to bucket 0 so every
+            # malformed row still has a deterministic home bucket.
+            bucketed = transcripts.withColumn(
+                "_bucket", F.coalesce(bucket_col(self.n_buckets), F.lit(0))
+            ).filter(F.col("_bucket").isin(pending))
+            bad = bucketed.filter(_invalid_transcript())
+            n_bad = {r["_bucket"]: r["count"] for r in bad.groupBy("_bucket").count().collect()}
+            # Per-turn triples are conversation-local -> one bucket each.
+            staged = pseudonymize(
+                per_turn_triples(bucketed.filter(~_invalid_transcript()), carry=("_bucket",)),
+                index_df, rules, hasher, carry=("_bucket",),
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                for b in pending:
+                    if n_bad.get(b):
+                        bad.filter(F.col("_bucket") == b).drop("_bucket").write.mode(
+                            "overwrite"
+                        ).json(os.path.join(self.quarantine_dir, f"bucket={b}"))
+                    self._commit_unit(
+                        b, staged.filter(F.col("_bucket") == b).drop("_bucket"),
+                        n_bad.get(b, 0), snapshot_id, int(store_compact), metrics,
+                    )
+                    if fail_after_bucket is not None and b >= fail_after_bucket:
+                        raise RuntimeError(f"injected failure after bucket {b}")
+            finally:
+                staged.unpersist()
         # Derived triples (entity typing, link scores) are GLOBAL facts
         # and get their own single commit, so the union over all
         # commits equals extract_triples(all) exactly regardless of
         # n_buckets (no cross-bucket duplicate type rows).
-        units: list[tuple[int | str, object, object]] = [
-            (
-                b,
-                per_turn_triples(
-                    bucketed.filter(
-                        (F.col("_bucket") == b) & ~_invalid_transcript()
-                    ).drop("_bucket")
-                ),
-                bucketed.filter(
-                    (F.col("_bucket") == b) & _invalid_transcript()
-                ).drop("_bucket"),
+        if "derived" not in done:
+            self._commit_unit(
+                "derived", pseudonymize(derived_triples(valid), index_df, rules, hasher),
+                0, snapshot_id, int(store_compact), metrics,
             )
-            for b in range(self.n_buckets)
-        ]
-        units.append(("derived", derived_triples(valid), None))
-
-        for bucket, triples, quarantine in units:
-            if bucket in done:
-                continue
-            out = pseudonymize(triples, index_df, rules, hasher).withColumn(
-                "pred_part", predicate_partition_col()
-            )
-            if store_compact:
-                from .compact import compact_triples
-
-                # pred_part is computed BEFORE compaction (level 2
-                # dictionary-codes the predicate column away); it passes
-                # through compact_triples untouched.
-                out = compact_triples(out, level=int(store_compact))
-            data_path = os.path.join(self.data_dir, f"bucket={bucket}")
-            self.fmt.write(out, data_path, partition_by=["pred_part"])
-            n_bad = 0
-            if quarantine is not None:
-                q_path = os.path.join(self.quarantine_dir, f"bucket={bucket}")
-                quarantine.write.mode("overwrite").json(q_path)
-                n_bad = spark.read.json(q_path).count() if _has_data(q_path) else 0
-            from .compact import maybe_expand
-
-            n, checksum = triples_checksum(
-                maybe_expand(self.fmt.read(spark, data_path).drop("pred_part"))
-            )
-            _atomic_write_json(self._manifest_path(bucket), {
-                "snapshot_id": snapshot_id,
-                "partition_id": bucket,
-                "row_count": n,
-                "checksum": checksum,
-                "quarantined": n_bad,
-                "storage_level": int(store_compact),
-            })
-            metrics["buckets"][str(bucket)] = {
-                "rows": n, "checksum": checksum, "quarantined": n_bad
-            }
-            if (
-                fail_after_bucket is not None
-                and isinstance(bucket, int)
-                and bucket >= fail_after_bucket
-            ):
-                raise RuntimeError(f"injected failure after bucket {bucket}")
 
         total = sum(m["rows"] for m in metrics["buckets"].values())
         total_bad = sum(m["quarantined"] for m in metrics["buckets"].values())
@@ -372,12 +379,41 @@ class GraphTableWriter:
         # an idempotent re-run doesn't duplicate the log)
         snaps = self.snapshots()
         if metrics["buckets"] or not any(s["version"] == self.version for s in snaps):
-            sample = self.fmt.read(
-                spark,
-                os.path.join(self.data_dir, f"bucket={self.n_buckets - 1 if self.n_buckets else 0}"),
-            )
-            self._commit_snapshot(snapshot_id, sample.drop("pred_part").schema.json())
+            self._commit_snapshot(spark, snapshot_id)
         return metrics
+
+    def _commit_unit(
+        self, bucket, triples: DataFrame, n_bad: int, snapshot_id: str,
+        storage_level: int, metrics: dict,
+    ) -> None:
+        """Write one unit's logical triples, then its manifest (last).
+        Row count and checksum are observed on the write action."""
+        obs = Observation()
+        out = triples.observe(obs, *_checksum_aggs()).withColumn(
+            "pred_part", predicate_partition_col()
+        )
+        if storage_level:
+            from .compact import compact_triples
+
+            # pred_part is computed BEFORE compaction (level 2
+            # dictionary-codes the predicate column away); it passes
+            # through compact_triples untouched.
+            out = compact_triples(out, level=storage_level)
+        self.fmt.write(
+            out, os.path.join(self.data_dir, f"bucket={bucket}"), partition_by=["pred_part"]
+        )
+        n, checksum = int(obs.get["n"]), int(obs.get["checksum"] or 0)
+        _atomic_write_json(self._manifest_path(bucket), {
+            "snapshot_id": snapshot_id,
+            "partition_id": bucket,
+            "row_count": n,
+            "checksum": checksum,
+            "quarantined": n_bad,
+            "storage_level": storage_level,
+        })
+        metrics["buckets"][str(bucket)] = {
+            "rows": n, "checksum": checksum, "quarantined": n_bad
+        }
 
     def read(self, spark: SparkSession, as_of: str | None = None) -> DataFrame:
         """Logical triple frame of the latest snapshot, or time-travel
@@ -423,19 +459,6 @@ class GraphTableWriter:
         return maybe_expand(
             self.fmt.read_union(spark, paths, base).drop("pred_part", "bucket")
         )
-
-
-def _has_data(path: str) -> bool:
-    """True if a written json/parquet dir contains any part files with
-    bytes (an all-empty-partition write yields only a _SUCCESS marker,
-    which spark.read.json cannot infer a schema from)."""
-    try:
-        return any(
-            f.startswith("part-") and os.path.getsize(os.path.join(path, f)) > 0
-            for f in os.listdir(path)
-        )
-    except FileNotFoundError:
-        return False
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:

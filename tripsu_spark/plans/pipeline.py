@@ -29,15 +29,17 @@ def pseudonymize(
     rules: Rules,
     hasher: Pseudonymizer,
     key_fn=None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Pass 2 core: mask + conditional rewrite (pseudo.rs:47-77).
     ``key_fn`` maps serialized terms into the index's key space (see
-    operators/masking.py::join_types)."""
+    operators/masking.py::join_types). ``carry`` names extra input
+    columns kept after the triple columns (default: none)."""
     masked = apply_masks(triples, index_df, rules, key_fn=key_fn)
     rewritten = pseudo_triple(
         masked, F.col("mask_subject"), F.col("mask_object"), hasher
     )
-    return rewritten.select(*TRIPLE_COLS)
+    return rewritten.select(*TRIPLE_COLS, *carry)
 
 
 def run_two_pass(
