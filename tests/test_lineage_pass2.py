@@ -124,3 +124,66 @@ def test_type_triples_index_matches_full_extraction(spark, setup):
     for t in (dirty, dirty.filter(~_invalid_transcript())):
         want = index_rows(extract_triples(t))
         assert index_rows(type_triples(t)) == want and want
+
+
+def test_commit_threads_inherit_job_group(spark, setup):
+    """Every job of an overlapped run, worker-thread commits included,
+    runs in the caller's job group: none lands in the no-group set."""
+    transcripts, rules, hasher, path = setup
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    group = f"lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        GraphTableWriter(path, n_buckets=6).run(spark, transcripts, rules, hasher)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup(group)
+
+
+def test_torn_bucket_under_overlap_resumes(spark, setup):
+    """A bucket whose data is written but whose manifest is not (a
+    torn commit) while other commits are in flight: the run raises,
+    every other unit commits exactly as in a clean run, and a resume
+    rewrites only the torn bucket, to the clean run's checksum."""
+    from tripsu_spark.plans.table_format import ParquetFormat
+
+    transcripts, rules, hasher, path = setup
+    dirty = _with_bad_rows(spark, transcripts)
+    n_buckets, torn = 6, 2
+
+    class TornAfterData(ParquetFormat):
+        def write(self, df, p, partition_by=None):
+            super().write(df, p, partition_by)
+            if p.endswith(f"bucket={torn}"):
+                raise OSError(f"torn commit of bucket {torn}")
+
+    clean = GraphTableWriter(f"{path}-clean", n_buckets=n_buckets)
+    clean.run(spark, dirty, rules, hasher)
+
+    writer = GraphTableWriter(path, n_buckets=n_buckets, table_format=TornAfterData())
+    with pytest.raises(OSError, match="torn commit"):
+        writer.run(spark, dirty, rules, hasher)
+    assert os.path.isdir(os.path.join(writer.data_dir, f"bucket={torn}"))
+    committed = writer.committed_buckets()
+    assert committed == (set(range(n_buckets)) | {"derived"}) - {torn}
+
+    def fields(p, b):
+        m = _manifest(p, b)
+        return m["row_count"], m["checksum"], m["quarantined"], m["storage_level"]
+
+    for b in committed:
+        assert fields(path, b) == fields(f"{path}-clean", b)
+
+    resumed = GraphTableWriter(path, n_buckets=n_buckets)
+    metrics = resumed.run(spark, dirty, rules, hasher)
+    assert set(metrics["buckets"]) == {str(torn)}
+    assert fields(path, torn) == fields(f"{path}-clean", torn)
+    got = {tuple(r) for r in resumed.read(spark).collect()}
+    want = {tuple(r) for r in clean.read(spark).collect()}
+    assert got == want and got

@@ -21,6 +21,11 @@ the exact spark-submit swap recipe is ``IcebergFormat``. Layout:
   per-row xxhash64 over the canonical serialization). Count and
   checksum are observed on the write action itself
   (``DataFrame.observe`` over the logical frame), not read back;
+- the first pending bucket's commit fills the cache; the other
+  buckets then commit concurrently from a few driver threads, in the
+  caller's job group, and the ``derived`` unit (which never reads the
+  cache) commits alongside from the start. Each unit is still its own
+  write, with its own manifest last;
 - malformed rows are counted in one grouped aggregate per run and
   written to ``_quarantine/bucket=<k>`` only for buckets that have any;
 - a killed job restarts and skips every bucket whose manifest exists
@@ -37,8 +42,9 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,6 +97,12 @@ def read_for_index(spark: SparkSession, graph_path: str) -> DataFrame:
         .filter(F.col("pred_part") == RDF_TYPE_PART)
         .drop("pred_part")
     )
+
+
+# Driver threads that commit units at once after the pass-2 cache is
+# filled. Each commit is a small job bound by latency, not CPU; the
+# executor's task slots still bound the work that actually runs.
+_COMMIT_THREADS = 4
 
 
 def bucket_col(n_buckets: int):
@@ -247,7 +259,11 @@ class GraphTableWriter:
     ) -> dict:
         """Process every uncommitted bucket; returns metrics dict.
 
-        ``fail_after_bucket`` injects a crash for the resume test.
+        ``fail_after_bucket`` injects a crash for the resume tests: the
+        pending buckets up to and including the first pending one
+        >= ``fail_after_bucket`` commit, then the run raises. Later
+        buckets and the ``derived`` unit are neither written nor
+        committed.
         Pass 1 builds the global type index over ALL valid transcripts
         (it must see every rdf:type statement regardless of bucket)
         from their rdf:type rows only, and commits it once per table
@@ -263,6 +279,19 @@ class GraphTableWriter:
         storage-format-invariant and need no read-back. Malformed rows
         are counted for all pending buckets in one grouped aggregate.
         A no-op resume launches no Spark job.
+
+        Commits overlap once the cache is filled: the ``derived`` unit
+        starts on a worker thread, the first pending bucket commits on
+        the calling thread (materializing the cache exactly once), and
+        the remaining buckets then commit from ``_COMMIT_THREADS``
+        worker threads. Workers inherit the caller's job group,
+        description and tags. Every unit still writes its quarantine
+        JSON, then its data, then its manifest last, so a crash leaves
+        each bucket either committed or re-run on resume. If a commit
+        fails, the run waits for the others, unpersists the cache and
+        re-raises the first failure in pending-bucket order.
+        ``metrics.json`` lists buckets in pending order, then
+        ``derived``, whatever order the commits finished in.
 
         ``overwrite=True`` starts a NEW table version (fresh data dirs;
         prior snapshots stay readable via ``read(as_of=...)``).
@@ -326,44 +355,73 @@ class GraphTableWriter:
             break  # all buckets of a version share one level; checking one suffices
         metrics: dict = {"snapshot_id": snapshot_id, "buckets": {}, "skipped": sorted(done, key=str)}
         pending = [b for b in range(self.n_buckets) if b not in done]
-        if pending or "derived" not in done:
-            index_df = self.fmt.read(spark, index_path)
-        if pending:
-            # null conv_id (a quarantine case) hashes to bucket 0 so every
-            # malformed row still has a deterministic home bucket.
-            bucketed = transcripts.withColumn(
-                "_bucket", F.coalesce(bucket_col(self.n_buckets), F.lit(0))
-            ).filter(F.col("_bucket").isin(pending))
-            bad = bucketed.filter(_invalid_transcript())
-            n_bad = {r["_bucket"]: r["count"] for r in bad.groupBy("_bucket").count().collect()}
-            # Per-turn triples are conversation-local -> one bucket each.
-            staged = pseudonymize(
-                per_turn_triples(bucketed.filter(~_invalid_transcript()), carry=("_bucket",)),
-                index_df, rules, hasher, carry=("_bucket",),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                for b in pending:
-                    if n_bad.get(b):
-                        bad.filter(F.col("_bucket") == b).drop("_bucket").write.mode(
-                            "overwrite"
-                        ).json(os.path.join(self.quarantine_dir, f"bucket={b}"))
-                    self._commit_unit(
-                        b, staged.filter(F.col("_bucket") == b).drop("_bucket"),
-                        n_bad.get(b, 0), snapshot_id, int(store_compact), metrics,
-                    )
-                    if fail_after_bucket is not None and b >= fail_after_bucket:
-                        raise RuntimeError(f"injected failure after bucket {b}")
-            finally:
-                staged.unpersist()
+        crash_at = next(
+            (b for b in pending if fail_after_bucket is not None and b >= fail_after_bucket), None
+        )
+        if crash_at is not None:
+            pending = pending[: pending.index(crash_at) + 1]
         # Derived triples (entity typing, link scores) are GLOBAL facts
         # and get their own single commit, so the union over all
         # commits equals extract_triples(all) exactly regardless of
         # n_buckets (no cross-bucket duplicate type rows).
-        if "derived" not in done:
-            self._commit_unit(
-                "derived", pseudonymize(derived_triples(valid), index_df, rules, hasher),
-                0, snapshot_id, int(store_compact), metrics,
-            )
+        commit_derived = "derived" not in done and crash_at is None
+        level = int(store_compact)
+        if pending or commit_derived:
+            index_df = self.fmt.read(spark, index_path)
+        staged = derived = first = None
+        rest: list = []
+        try:
+            with ThreadPoolExecutor(max_workers=_COMMIT_THREADS) as pool:
+                # Worker threads run their jobs under the caller's job
+                # group, description and tags.
+                inherit = inheritable_thread_target(spark)
+                if commit_derived:
+                    # never reads the pass-2 cache: it commits alongside
+                    derived = pool.submit(
+                        inherit(self._commit_unit), "derived",
+                        pseudonymize(derived_triples(valid), index_df, rules, hasher),
+                        0, snapshot_id, level,
+                    )
+                if pending:
+                    # null conv_id (a quarantine case) hashes to bucket 0 so
+                    # every malformed row still has a deterministic home bucket.
+                    bucketed = transcripts.withColumn(
+                        "_bucket", F.coalesce(bucket_col(self.n_buckets), F.lit(0))
+                    ).filter(F.col("_bucket").isin(pending))
+                    bad = bucketed.filter(_invalid_transcript())
+                    n_bad = {r["_bucket"]: r["count"] for r in bad.groupBy("_bucket").count().collect()}
+                    # Per-turn triples are conversation-local -> one bucket each.
+                    staged = pseudonymize(
+                        per_turn_triples(bucketed.filter(~_invalid_transcript()), carry=("_bucket",)),
+                        index_df, rules, hasher, carry=("_bucket",),
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+                    def commit_bucket(b: int) -> dict:
+                        if n_bad.get(b):
+                            bad.filter(F.col("_bucket") == b).drop("_bucket").write.mode(
+                                "overwrite"
+                            ).json(os.path.join(self.quarantine_dir, f"bucket={b}"))
+                        return self._commit_unit(
+                            b, staged.filter(F.col("_bucket") == b).drop("_bucket"),
+                            n_bad.get(b, 0), snapshot_id, level,
+                        )
+
+                    # The first commit fills the cache on this thread, so
+                    # the rest read it instead of each materializing it.
+                    first = commit_bucket(pending[0])
+                    rest = [pool.submit(inherit(commit_bucket), b) for b in pending[1:]]
+        finally:
+            if staged is not None:
+                staged.unpersist()
+        # A failed commit re-raises here, after every other one ended:
+        # the first failure in pending-bucket order wins.
+        if pending:
+            for b, entry in zip(pending, [first] + [f.result() for f in rest]):
+                metrics["buckets"][str(b)] = entry
+        if crash_at is not None:
+            raise RuntimeError(f"injected failure after bucket {crash_at}")
+        if derived is not None:
+            metrics["buckets"]["derived"] = derived.result()
 
         total = sum(m["rows"] for m in metrics["buckets"].values())
         total_bad = sum(m["quarantined"] for m in metrics["buckets"].values())
@@ -384,10 +442,11 @@ class GraphTableWriter:
 
     def _commit_unit(
         self, bucket, triples: DataFrame, n_bad: int, snapshot_id: str,
-        storage_level: int, metrics: dict,
-    ) -> None:
-        """Write one unit's logical triples, then its manifest (last).
-        Row count and checksum are observed on the write action."""
+        storage_level: int,
+    ) -> dict:
+        """Write one unit's logical triples, then its manifest (last);
+        returns the unit's ``metrics.json`` entry. Row count and
+        checksum are observed on the write action."""
         obs = Observation()
         out = triples.observe(obs, *_checksum_aggs()).withColumn(
             "pred_part", predicate_partition_col()
@@ -411,9 +470,7 @@ class GraphTableWriter:
             "quarantined": n_bad,
             "storage_level": storage_level,
         })
-        metrics["buckets"][str(bucket)] = {
-            "rows": n, "checksum": checksum, "quarantined": n_bad
-        }
+        return {"rows": n, "checksum": checksum, "quarantined": n_bad}
 
     def read(self, spark: SparkSession, as_of: str | None = None) -> DataFrame:
         """Logical triple frame of the latest snapshot, or time-travel
