@@ -19,7 +19,9 @@ Two interchangeable hash backends:
   100% JVM-side / whole-stage-codegen, DuckDB-oracle-checkable
   (the north-star names SHA-256 salted hashing).
 - ``blake3``: keyed BLAKE3 exactly like the reference, as an
-  Arrow-batched pandas UDF over tripsu_spark.functions.blake3_py.
+  Arrow-batched pandas UDF over tripsu_spark.functions.blake3_np
+  (``functions/blake3_py`` is the scalar reference it is checked
+  against).
 """
 
 from __future__ import annotations

@@ -35,10 +35,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import KIND_IRI, KIND_LITERAL, TRIPLE_SCHEMA
+from .. import RDF_TYPE
+from ..schemas import KIND_IRI, KIND_LITERAL, TRIPLE_COLS, TRIPLE_SCHEMA
 
 KG = "http://example.org/kg/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD_DATETIME = "http://www.w3.org/2001/XMLSchema#dateTime"
 XSD_INTEGER = "http://www.w3.org/2001/XMLSchema#integer"
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss"
@@ -288,7 +288,7 @@ def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:
     rdf:type rows are minted once per group, so callers comparing with
     the Catalyst path apply ``dedupe_triples`` (RDF graphs are sets).
     Hot conv_ids at the groupBy shuffle are handled by AQE skew splits
-    (conf/spark_defaults.py); correctness never depends on partition
+    (``session.DEFAULTS``); correctness never depends on partition
     placement.
     """
     user_re = re.compile(_MENTION_USER)
@@ -363,9 +363,7 @@ def extract_triples_pandas(transcripts: DataFrame) -> DataFrame:
 def dedupe_triples(triples: DataFrame) -> DataFrame:
     """Global exact dedup of triples (entity/type rows are minted once
     per conversation group in the pandas path)."""
-    return triples.dropDuplicates(
-        ["s_kind", "s_value", "predicate", "o_kind", "o_value", "o_datatype", "o_lang"]
-    )
+    return triples.dropDuplicates(TRIPLE_COLS)
 
 
 def conversation_stats(transcripts: DataFrame) -> DataFrame:

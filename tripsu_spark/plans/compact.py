@@ -39,15 +39,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.extract import KG, RDF_TYPE, XSD_DATETIME, XSD_INTEGER
-from ..schemas import KIND_BLANK, KIND_IRI, KIND_LITERAL
+from ..schemas import KIND_BLANK, KIND_IRI, KIND_LITERAL, TRIPLE_COLS
 
 RDF_NS = RDF_TYPE[: RDF_TYPE.rindex("#") + 1]
 # code 0 = verbatim, 1 = KG base, 2 = RDF namespace
 _PREFIXES = [(1, KG), (2, RDF_NS)]
-
-TRIPLE_COLS = [
-    "s_kind", "s_value", "predicate", "o_kind", "o_value", "o_datatype", "o_lang",
-]
 
 COMPACT_COLS = [
     "s_kind", "s_value", "s_pfx", "predicate", "p_pfx",

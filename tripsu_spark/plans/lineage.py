@@ -32,9 +32,9 @@ the exact spark-submit swap recipe is ``IcebergFormat``. Layout:
   (commit order: data first, manifest last, so a torn write re-runs);
 - ``metrics.json`` aggregates per-bucket counts at the end.
 
-The graph table itself is partitioned by predicate local-name —
-vertical partitioning, the classic RDF-store layout: pass-1 style
-scans (rdf:type only) prune to one partition.
+The graph table itself is partitioned ``type`` (rdf:type statements)
+vs ``data`` (everything else): pass-1 style scans (rdf:type only)
+prune to one partition.
 """
 
 from __future__ import annotations
@@ -48,6 +48,7 @@ from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import RDF_TYPE
 from ..crypto import Pseudonymizer
 from ..functions.terms import serialize_triple_line
 from ..operators.extract import derived_triples, per_turn_triples, type_triples
@@ -57,25 +58,15 @@ from .pipeline import pseudonymize
 from .table_format import ParquetFormat, TableFormat
 
 
-def predicate_partition_col(fine: bool = False):
-    """Partition value for the stored graph table.
+def predicate_partition_col():
+    """Partition value for the stored graph table: ``type`` (rdf:type
+    statements) vs ``data`` (everything else).
 
-    Default: TWO partitions — ``type`` (rdf:type statements) vs ``data``
-    (everything else). Partition by what readers actually filter on
-    (guide §6): the only selective reader is pass 1
-    (``read_for_index``, rdf:type only); pass 2 always reads every
-    predicate. The old per-predicate vertical partitioning made every
-    dynamic-partition write task keep ~14 open parquet writers and
-    multiplied output files ~7x for pruning nobody used (measured at
-    sf0.1: partitioned write +0.89s over flat with 14 values, +0.17s
-    with 2). ``fine=True`` restores per-predicate layout for
-    deployments that query single predicates.
+    The only selective reader is pass 1 (``read_for_index``, rdf:type
+    only); pass 2 reads every predicate. Two values rather than one per
+    predicate because the partitioned write cost +0.89s over flat with
+    14 values and +0.17s with 2 (sf0.1).
     """
-    if fine:
-        local = F.element_at(F.split(F.col("predicate"), r"[#/]"), -1)
-        return F.regexp_replace(local, r"[^A-Za-z0-9_\-]", "_")
-    from ..operators.extract import RDF_TYPE
-
     return F.when(F.col("predicate") == RDF_TYPE, F.lit(RDF_TYPE_PART)).otherwise(
         F.lit("data")
     )

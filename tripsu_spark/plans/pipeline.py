@@ -1,12 +1,15 @@
-"""Two-pass KG-construction pipeline (reference main.rs subcommands).
+"""Pass 2 of the two-pass KG-construction pipeline (reference main.rs
+``tripsu pseudo``) and the flagship rules.
 
-Pass 1 (``tripsu index``): transcripts -> triples -> type index.
-Pass 2 (``tripsu pseudo``): triples + broadcast(index) + rules ->
-masked -> pseudonymized triples -> partitioned graph table.
+Pass 1 (``tripsu index``) is ``operators/index.build_type_index``;
+``pseudonymize`` is the pass-2 core: triples + broadcast(index) + rules
+-> masked -> pseudonymized triples. The lineage runner, the CLI, the
+streaming path, the driver contract and the bench all call it; each
+owns its own extraction, storage and pass-1 wiring.
 
-The whole plan is DataFrame algebra; `.explain("formatted")` shows a
-single shuffle for the index aggregate and (in the default sha256
-mode) broadcast joins + whole-stage codegen for all of pass 2.
+The plan is DataFrame algebra; `.explain("formatted")` shows (in the
+default sha256 mode) broadcast joins + whole-stage codegen for all of
+pass 2.
 """
 
 from __future__ import annotations
@@ -15,12 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..crypto import Pseudonymizer, pseudo_triple
-from ..operators.extract import extract_triples
-from ..operators.index import build_type_index
 from ..operators.masking import apply_masks
 from ..rules import Rules
-
-TRIPLE_COLS = ["s_kind", "s_value", "predicate", "o_kind", "o_value", "o_datatype", "o_lang"]
+from ..schemas import TRIPLE_COLS
 
 
 def pseudonymize(
@@ -40,33 +40,6 @@ def pseudonymize(
         masked, F.col("mask_subject"), F.col("mask_object"), hasher
     )
     return rewritten.select(*TRIPLE_COLS, *carry)
-
-
-def run_two_pass(
-    transcripts: DataFrame,
-    rules: Rules,
-    hasher: Pseudonymizer,
-    extractor=extract_triples,
-    persist: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline: returns (type_index, pseudonymized_triples).
-
-    The extracted triple frame feeds pass 1 (index aggregate) AND pass 2
-    (mask joins), so by default it is persisted — otherwise extraction
-    re-runs once per consumer (round-1 verdict item 1). Callers that
-    materialize the graph table themselves (bench.py, the lineage
-    runner) pass ``persist=False`` and reuse their parquet instead.
-    The caller owns the unpersist (Spark evicts LRU if memory is tight;
-    MEMORY_AND_DISK spills rather than recomputes).
-    """
-    triples = extractor(transcripts)
-    if persist:
-        from pyspark import StorageLevel
-
-        triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
-    index_df = build_type_index(triples)
-    out = pseudonymize(triples, index_df, rules, hasher)
-    return index_df, out
 
 
 DEFAULT_RULES_YAML = """

@@ -34,6 +34,9 @@ TRIPLE_SCHEMA = StructType(
     ]
 )
 
+# Triple column names in TRIPLE_SCHEMA order (selects, dedup keys).
+TRIPLE_COLS = TRIPLE_SCHEMA.fieldNames()
+
 # Graft input table (BASELINE.json input_hint).
 TRANSCRIPT_SCHEMA = StructType(
     [

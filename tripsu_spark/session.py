@@ -59,12 +59,13 @@ FAST_WRITE_CONF = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     # Sort-free dynamic-partition writes (guide §6): planned writes
     # insert a per-task sort by the partition column before every
-    # partitionBy() write; with a bounded predicate vocabulary (~14
-    # values) each task instead keeps up to 64 open part writers and
-    # skips the sort entirely (measured: partitioned write 2.96s ->
-    # 2.57s at sf0.1). On a cluster keep maxConcurrentOutputFileWriters
-    # >= distinct partition values per task, or re-enable plannedWrite
-    # for high-cardinality partition columns.
+    # partitionBy() write; with the graph table's 2 partition values
+    # (``type``/``data``, plans/lineage.py) each task instead keeps one
+    # open part writer per value and skips the sort entirely (measured:
+    # partitioned write 2.96s -> 2.57s at sf0.1). On a cluster keep
+    # maxConcurrentOutputFileWriters >= distinct partition values per
+    # task, or re-enable plannedWrite for high-cardinality partition
+    # columns.
     "spark.sql.optimizer.plannedWrite.enabled": "false",
     "spark.sql.maxConcurrentOutputFileWriters": "64",
 }
