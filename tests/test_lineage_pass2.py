@@ -187,3 +187,26 @@ def test_torn_bucket_under_overlap_resumes(spark, setup):
     got = {tuple(r) for r in resumed.read(spark).collect()}
     want = {tuple(r) for r in clean.read(spark).collect()}
     assert got == want and got
+
+
+def test_read_with_no_manifest_raises(spark, setup):
+    """A first run that writes data but dies before any manifest leaves
+    nothing committed: read() raises instead of serving the unvouched
+    data files."""
+    from tripsu_spark.plans.table_format import ParquetFormat
+
+    transcripts, rules, hasher, path = setup
+
+    class DiesAfterData(ParquetFormat):
+        def write(self, df, p, partition_by=None):
+            super().write(df, p, partition_by)
+            if "bucket=" in p:
+                raise OSError("died before the manifest")
+
+    writer = GraphTableWriter(path, n_buckets=2, table_format=DiesAfterData())
+    with pytest.raises(OSError, match="died before the manifest"):
+        writer.run(spark, transcripts, rules, hasher)
+    assert os.path.isdir(os.path.join(writer.data_dir, "bucket=0"))
+    assert writer.committed_buckets() == set()
+    with pytest.raises(ValueError, match="no bucket paths"):
+        GraphTableWriter(path, n_buckets=2).read(spark)

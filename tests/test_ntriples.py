@@ -62,22 +62,33 @@ TRICKY = SAMPLE + [
 ]
 
 
-def test_hybrid_parse_identical_to_python_parse(spark):
-    """The Catalyst fast path + Python fallback must produce exactly the
-    rows the uniform Python parser produces — including _error text —
-    on a corpus mixing every form, escapes, and malformed lines."""
+def test_tricky_corpus_errors_and_values(spark):
+    """Every malformed line of a corpus mixing every term form, escapes
+    and whitespace slop yields exactly one ``_error`` row with its
+    reason; every valid line decodes to its exact terms."""
     lines = spark.createDataFrame([(line,) for line in TRICKY], ["value"])
-    hybrid = {tuple(r) for r in parse_ntriples_lines(lines, hybrid=True).collect()}
-    python = {tuple(r) for r in parse_ntriples_lines(lines, hybrid=False).collect()}
-    assert hybrid == python
-
-
-def test_catalyst_fast_path_has_no_python_eval(spark):
-    from tripsu_spark.sources.ntriples import parse_ntriples_catalyst
-
-    lines = spark.createDataFrame([(s,) for s in SAMPLE[:3]], ["value"])
-    plan = parse_ntriples_catalyst(lines)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    rows = [tuple(r) for r in parse_ntriples_lines(lines).collect()]
+    nulls = (None,) * 7
+    assert sorted(r[7] for r in rows if r[7] is not None) == sorted([
+        "malformed triple: bad line with \\ escape but no triple",
+        'malformed object: "unterminated',
+        "malformed triple: <http://a/s> <http://a/p> <http://a/o> no dot",
+    ])
+    assert all(r[:7] == nulls for r in rows if r[7] is not None)
+    s, p = ("iri", "http://a/s"), "http://a/p"
+    lit = lambda v, dt=None, lang=None: (*s, p, "literal", v, dt, lang, None)  # noqa: E731
+    assert sorted((r for r in rows if r[7] is None), key=repr) == sorted([
+        (*s, p, "iri", "http://a/o", None, None, None),
+        ("blank", "b0", p, "blank", "b1", None, None, None),
+        lit("plain"),
+        lit("tagged", lang="en"),
+        lit("42", dt="http://www.w3.org/2001/XMLSchema#int"),
+        lit('esc "quote" back\\slash\nnl'),
+        lit(""),
+        lit("", dt=""),
+        lit("\u00e9\U0001F600"),
+        lit("spaced"),
+    ], key=repr)
 
 
 def test_roundtrip_write_read(spark, tmp_path):

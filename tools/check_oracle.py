@@ -88,7 +88,8 @@ def main() -> int:
         drows = _pandas_rows(ddf)
         ok_cols = sorted(scols) == sorted(dcols)
         ok_rows = len(srows) == len(drows)
-        ok_dtype, dtype_msg = _check_dtypes(sdf, ddf)
+        bad_dtypes, suspect_dtypes = _check_dtypes(sdf, ddf)
+        ok_dtype = not bad_dtypes
         sh = table_hash([tuple(r) for r in srows], scols)
         dh = table_hash(drows, dcols)
         ok_hash = sh == dh
@@ -97,10 +98,12 @@ def main() -> int:
             f"{name:24s} {status}  spark={len(srows)} duck={len(drows)} "
             f"cols={'=' if ok_cols else f'{scols} vs {dcols}'} "
             f"hash={'=' if ok_hash else 'MISMATCH'}"
-            + ("" if ok_dtype else f" dtype={dtype_msg}")
+            + ("" if ok_dtype else f" dtype={'; '.join(bad_dtypes)}")
         )
         if status == "FAIL":
             failures += 1
+            if not ok_hash and suspect_dtypes:
+                print(f"  possible dtype divergence: {'; '.join(suspect_dtypes)}")
             if not ok_hash and ok_rows and ok_cols:
                 _diff(srows, scols, drows, dcols)
     spark.stop()
@@ -125,23 +128,26 @@ def _pandas_rows(ddf) -> list[tuple]:
     return rows
 
 
-def _check_dtypes(sdf, ddf) -> tuple[bool, str]:
+def _check_dtypes(sdf, ddf) -> tuple[list[str], list[str]]:
     """Oracle pandas dtypes must be type-compatible with the Spark
     schema: an integral Spark column materializing as floating on the
     oracle side (HUGEINT/uncast SUM -> float64) is exactly the
-    divergence class that goes driver-red; name it explicitly."""
+    divergence class that goes driver-red; name it explicitly.
+
+    Returns (divergent, suspect) column descriptions. pandas uses
+    float64 for a nullable int column, so only a NaN-free float column
+    proves an oracle typing bug; one holding a NaN is only a suspect,
+    named when the query's hash mismatches too."""
     import pandas.api.types as pt
 
     spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    bad = []
+    bad, suspect = [], []
     for col in ddf.columns:
         st = spark_types.get(col)
         if st in ("tinyint", "smallint", "int", "bigint") and pt.is_float_dtype(ddf[col]):
-            # pandas uses float64 for a nullable int column; only a
-            # NaN-free float column proves an oracle typing bug
-            if not ddf[col].isna().any():
-                bad.append(f"{col}: spark {st} vs oracle {ddf[col].dtype}")
-    return (not bad, "; ".join(bad))
+            desc = f"{col}: spark {st} vs oracle {ddf[col].dtype}"
+            (suspect if ddf[col].isna().any() else bad).append(desc)
+    return bad, suspect
 
 
 def _diff(srows, scols, drows, dcols, limit=5):

@@ -59,10 +59,9 @@ def serialize_object(
     )
 
 
-def subject_key(df_prefix: str = "") -> Column:
+def subject_key() -> Column:
     """Serialized subject term — the index key form (index.rs:87)."""
-    p = df_prefix
-    return serialize_subject(F.col(p + "s_kind"), F.col(p + "s_value"))
+    return serialize_subject(F.col("s_kind"), F.col("s_value"))
 
 
 def object_key() -> Column:

@@ -472,24 +472,16 @@ class GraphTableWriter:
 
         snaps = self.snapshots()
         if not snaps:
-            # No committed snapshot yet. Mid-run: read the buckets the
-            # manifests vouch for, through the format seam (a non-
-            # directory format has no "<base>/data" umbrella table to
-            # read — only per-bucket tables exist). Legacy tables with
-            # neither snapshots nor manifests fall back to the direct
-            # parquet-layout read.
-            done = self.committed_buckets()
-            if done:
-                paths = [
-                    os.path.join(self.data_dir, f"bucket={b}")
-                    for b in sorted(done, key=str)
-                ]
-                return maybe_expand(
-                    self.fmt.read_union(spark, paths, self.data_dir)
-                    .drop("pred_part", "bucket")
-                )
+            # No committed snapshot yet. Mid-run: read only the buckets
+            # the manifests vouch for, through the format seam. Data
+            # files without a manifest (a torn commit) are never served;
+            # with no manifest at all read_union raises.
+            paths = [
+                os.path.join(self.data_dir, f"bucket={b}")
+                for b in sorted(self.committed_buckets(), key=str)
+            ]
             return maybe_expand(
-                self.fmt.read(spark, os.path.join(self.base_path, "data"))
+                self.fmt.read_union(spark, paths, self.data_dir)
                 .drop("pred_part", "bucket")
             )
         if as_of is None:

@@ -11,7 +11,6 @@ lang both NULL (rdf_types.rs:49-69); values are uninterpreted strings.
 
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -46,25 +45,5 @@ TRANSCRIPT_SCHEMA = StructType(
         StructField("text", StringType(), True),
         StructField("tool", StringType(), True),
         StructField("ts", TimestampType(), True),
-    ]
-)
-
-# Pass-1 output: one row per subject, deduped serialized type IRIs.
-# subject_key is the full serialized term ("<iri>" or "_:id"), matching
-# the reference's index keying on term serializations (index.rs:87).
-INDEX_SCHEMA = StructType(
-    [
-        StructField("subject_key", StringType(), False),
-        StructField("types", StringType(), False),  # conceptual; real col is array<string>
-    ]
-)
-
-# Lineage manifest row (north_rule: per-partition lineage + metrics).
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("snapshot_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("row_count", LongType(), False),
-        StructField("checksum", StringType(), False),
     ]
 )

@@ -31,11 +31,6 @@ def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def stream_per_turn_triples(transcripts: DataFrame) -> DataFrame:
-    """Append-mode streaming triples (same logic as batch)."""
-    return per_turn_triples(transcripts)
-
-
 def stream_entity_link_counts(
     transcripts: DataFrame, watermark: str = "10 minutes", window: str = "1 hour"
 ) -> DataFrame:
@@ -228,7 +223,7 @@ def run_pseudo_stream_to_parquet(
         out = pseudonymize(batch_triples, merged, rules, hasher)
         out.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
-    triples = stream_per_turn_triples(read_transcript_stream(spark, in_path))
+    triples = per_turn_triples(read_transcript_stream(spark, in_path))
     return (
         triples.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
@@ -243,7 +238,7 @@ def run_stream_to_parquet(
 ):
     """Drain everything currently in ``in_path`` (availableNow) into a
     parquet triple table with an exactly-once checkpoint; restartable."""
-    stream = stream_per_turn_triples(read_transcript_stream(spark, in_path))
+    stream = per_turn_triples(read_transcript_stream(spark, in_path))
     return (
         stream.writeStream.format("parquet")
         .option("path", out_path)
